@@ -81,21 +81,34 @@ def _rle_decode(data: bytes, w: int, h: int, four_bit: bool) -> np.ndarray:
     return out
 
 
+def _header(buf: bytes) -> tuple[int, int, int, int, int, int, int]:
+    """File + info header: ``(data_off, hdr_size, w, h_raw, bits,
+    compression, colors_used)``; ``h_raw < 0`` means top-down rows."""
+    if buf[:2] != b"BM":
+        raise ValueError("not a BMP")
+    if len(buf) < 18:
+        raise ValueError("truncated BMP header")
+    (hdr_size,) = struct.unpack_from("<I", buf, 14)
+    if hdr_size < 40:
+        raise NotImplementedError("BITMAPCOREHEADER (OS/2 v1) unsupported")
+    if len(buf) < 50:
+        raise ValueError("truncated BMP header")
+    data_off, _, w, h_raw, _planes, bits, comp = struct.unpack_from("<IIiiHHI", buf, 10)
+    (clr_used,) = struct.unpack_from("<I", buf, 46)
+    return data_off, hdr_size, w, h_raw, bits, comp, clr_used
+
+
+def info(buf: bytes) -> tuple[int, int, int]:
+    _, _, w, h_raw, bits, _, _ = _header(bytes(buf))
+    return w, abs(h_raw), (1 if bits <= 8 else bits // 8)
+
+
 def decode_full(buf: bytes) -> BmpInfo:
     """BMP → ``index``/``pixels`` + ``palette``: palette files keep
     the index band (the reference's band-1 view); 16/24/32-bit return
     ``pixels`` as (h, w, 3|4) RGB(A)."""
     buf = bytes(buf)
-    if buf[:2] != b"BM":
-        raise ValueError("not a BMP")
-    (data_off,) = struct.unpack_from("<I", buf, 10)
-    (hdr_size,) = struct.unpack_from("<I", buf, 14)
-    if hdr_size < 40:
-        raise NotImplementedError("BITMAPCOREHEADER (OS/2 v1) unsupported")
-    w, h_raw = struct.unpack_from("<ii", buf, 18)
-    planes, bits = struct.unpack_from("<HH", buf, 26)
-    (comp,) = struct.unpack_from("<I", buf, 30)
-    (clr_used,) = struct.unpack_from("<I", buf, 46)
+    data_off, hdr_size, w, h_raw, bits, comp, clr_used = _header(buf)
     top_down = h_raw < 0
     h = abs(h_raw)
     palette = None

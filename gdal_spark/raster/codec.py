@@ -19,23 +19,38 @@ Pillow/imagecodecs/cv2, so:
   subset and raises loudly beyond it). VP8L is lossless, so fmt='webp'
   rows are checksum-exact, mirroring GDAL's WEBP_LOSSLESS=YES path
   (``frmts/webp/webpdataset.cpp``).
-- The round-1 ``FakeLossyCodec`` (quantize+zlib) is kept only for
-  decoding legacy fixture bytes; no encoder path emits it anymore.
-  Every caller goes through this module only.
+- TIFF, PNM, GIF and BMP decode through their own modules.
+
+One driver table, :data:`DRIVERS`, decides how an image payload
+becomes a header or pixels: one ``(name, identify, info, decode)``
+entry per format, GDAL's Identify/Open shape. ``identify`` tests the
+magic bytes, ``info`` is the header parser the format's own decoder
+uses, and ``decode`` returns the pixels. :func:`sniff_info` and
+:func:`decode_image` are one lookup over that table; truncated or
+malformed payloads raise ``ValueError`` and unrecognised magic
+``NotImplementedError``.
+
+:func:`map_images` is the one way a DataFrame operator runs per-image
+Python: it clamps the Arrow batch size, decodes each image once and
+hands ``(row, pixels)`` to the operator's function, which yields
+output tuples in schema order.
 
 Arrays are HxW (gray) or HxWxC uint8.
 """
 
 from __future__ import annotations
 
+import importlib
 import struct
 import zlib
+from functools import partial
+from typing import Callable, NamedTuple
 
 import numpy as np
+import pandas as pd
 
 PNG_SIG = b"\x89PNG\r\n\x1a\n"
-FAKE_MAGIC = b"GSLOSSY1"  # deterministic fake lossy container
-FAKE_QUANT = 4  # quant step → worst-case err 2 → PSNR ≈ 45 dB ≥ 40
+_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # colour type → samples
 
 
 # ---------------------------------------------------------------------------
@@ -182,6 +197,26 @@ def _bytes_to_samples(rows: np.ndarray, w: int, channels: int, depth: int):
     ).reshape(n, w, 1)
 
 
+def _png_ihdr(buf: bytes) -> tuple[int, int, int, int, int]:
+    """``(w, h, depth, color_type, interlace)`` from IHDR, which PNG
+    §5.6 places first."""
+    if len(buf) < 33 or buf[12:16] != b"IHDR":
+        raise ValueError("truncated PNG: no IHDR chunk")
+    w, h, depth, color_type, comp, filt, interlace = struct.unpack_from(
+        ">IIBBBBB", buf, 16
+    )
+    if color_type not in _PNG_CHANNELS:
+        raise ValueError(f"bad PNG color type {color_type}")
+    if comp != 0 or filt != 0:
+        raise ValueError("bad PNG compression/filter method")
+    return w, h, depth, color_type, interlace
+
+
+def png_info(buf: bytes) -> tuple[int, int, int]:
+    w, h, _, color_type, _ = _png_ihdr(buf)
+    return w, h, _PNG_CHANNELS[color_type]
+
+
 def png_decode_full(buf: bytes):
     """Full-spec PNG decode → (samples, info): every bit depth
     (1/2/4/8/16), every color type (gray, RGB, palette, gray+alpha,
@@ -194,23 +229,19 @@ def png_decode_full(buf: bytes):
     if bytes(buf[:8]) != PNG_SIG:
         raise ValueError("not a PNG")
     buf = bytes(buf)
+    w, h, depth, color_type, interlace = _png_ihdr(buf)
     off = 8
-    w = h = depth = color_type = interlace = None
     palette = None
     trns = None
     idat = []
     while off < len(buf):
-        (ln,) = struct.unpack_from(">I", buf, off)
+        ln = int.from_bytes(buf[off : off + 4], "big")
+        if off + 12 + ln > len(buf):
+            raise ValueError("truncated PNG chunk")
         tag = buf[off + 4 : off + 8]
         data = buf[off + 8 : off + 8 + ln]
         off += 12 + ln
-        if tag == b"IHDR":
-            w, h, depth, color_type, comp, filt, interlace = struct.unpack(
-                ">IIBBBBB", data
-            )
-            if comp != 0 or filt != 0:
-                raise ValueError("bad PNG compression/filter method")
-        elif tag == b"PLTE":
+        if tag == b"PLTE":
             palette = np.frombuffer(data, dtype=np.uint8).reshape(-1, 3).copy()
         elif tag == b"tRNS":
             trns = data
@@ -218,9 +249,7 @@ def png_decode_full(buf: bytes):
             idat.append(data)
         elif tag == b"IEND":
             break
-    if w is None:
-        raise ValueError("PNG without IHDR")
-    channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color_type]
+    channels = _PNG_CHANNELS[color_type]
     bpp = max(1, channels * depth // 8)
 
     def stride_of(width):
@@ -287,35 +316,6 @@ def png_decode(buf: bytes) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
-# Fake lossy codec (STAND-IN for jpeg/webp — NOT a real codec)
-# ---------------------------------------------------------------------------
-
-
-def fake_lossy_encode(arr: np.ndarray, fmt: str = "jpeg", compress_level: int = 6) -> bytes:
-    """Deterministic stand-in for jpeg/webp: quantize channel values to
-    step FAKE_QUANT then zlib. Lossy (so the PSNR path is exercised),
-    deterministic (so tests are stable). Clearly NOT the real codec."""
-    arr = np.ascontiguousarray(arr, dtype=np.uint8)
-    h, w = arr.shape[:2]
-    c = 1 if arr.ndim == 2 else arr.shape[2]
-    q = (arr.astype(np.int16) // FAKE_QUANT).astype(np.uint8)
-    payload = zlib.compress(q.tobytes(), compress_level)
-    fmt_b = fmt.encode()[:4].ljust(4, b"\x00")
-    head = FAKE_MAGIC + fmt_b + struct.pack("<IIIB", h, w, c, FAKE_QUANT)
-    return head + payload
-
-
-def fake_lossy_decode(buf: bytes) -> np.ndarray:
-    if buf[:8] != FAKE_MAGIC:
-        raise ValueError("not a fake-lossy payload")
-    h, w, c, q = struct.unpack_from("<IIIB", buf, 12)
-    raw = zlib.decompress(buf[25:])
-    arr = np.frombuffer(raw, dtype=np.uint8).reshape((h, w) if c == 1 else (h, w, c))
-    out = arr.astype(np.int16) * q + q // 2
-    return np.clip(out, 0, 255).astype(np.uint8)
-
-
-# ---------------------------------------------------------------------------
 # Dispatch
 # ---------------------------------------------------------------------------
 
@@ -355,39 +355,74 @@ def encode_image(arr: np.ndarray, fmt: str, compress_level: int = 6) -> bytes:
     raise NotImplementedError(f"codec {fmt!r} not available in this container")
 
 
-def decode_image(buf: bytes, fmt: str | None = None) -> np.ndarray:
+class Driver(NamedTuple):
+    """One image format: ``identify(buf)`` tests the magic bytes,
+    ``info(buf)`` parses ``(width, height, bands)`` from the header
+    alone, ``decode(buf)`` returns the pixels."""
+
+    name: str
+    identify: Callable[[bytes], bool]
+    info: Callable[[bytes], tuple[int, int, int]]
+    decode: Callable[[bytes], np.ndarray]
+
+
+def _lazy(module: str, attr: str) -> Callable:
+    """``gdal_spark.raster.<module>.<attr>``, imported on first call so
+    a worker only loads the codecs its rows use."""
+
+    def call(buf):
+        return getattr(importlib.import_module(f"gdal_spark.raster.{module}"), attr)(buf)
+
+    return call
+
+
+_TIFF_MAGIC = (b"II*\x00", b"MM\x00*", b"II+\x00", b"MM\x00+")
+
+DRIVERS: tuple[Driver, ...] = (
+    Driver("png", lambda b: b[:8] == PNG_SIG, png_info, png_decode),
+    Driver("jpeg", lambda b: b[:2] == b"\xff\xd8",
+           _lazy("jpeg", "info"), _lazy("jpeg", "decode")),
+    Driver("webp", lambda b: b[:4] == b"RIFF" and b[8:12] == b"WEBP",
+           _lazy("webp", "info"), _lazy("webp", "decode")),
+    Driver("tiff", lambda b: b[:4] in _TIFF_MAGIC,
+           _lazy("tiff", "info"), _lazy("tiff", "decode")),
+    Driver("pnm", lambda b: b[:2] in (b"P5", b"P6") and b[2:3].isspace(),
+           _lazy("simple_formats", "pnm_info"), _lazy("simple_formats", "pnm_decode")),
+    Driver("gif", lambda b: b[:6] in (b"GIF87a", b"GIF89a"),
+           _lazy("gif", "info"), _lazy("gif", "decode")),
+    Driver("bmp", lambda b: b[:2] == b"BM", _lazy("bmp", "info"), _lazy("bmp", "decode")),
+)
+
+
+def identify(buf: bytes) -> str | None:
+    """Name of the driver whose magic bytes ``buf`` starts with, or None."""
     b = bytes(buf)
-    if b[:8] == PNG_SIG:
-        return png_decode(b)
-    if b[:2] == b"\xff\xd8":
-        from gdal_spark.raster import jpeg
+    return next((d.name for d in DRIVERS if d.identify(b)), None)
 
-        return jpeg.decode(b)
-    if b[:4] == b"RIFF" and b[8:12] == b"WEBP":
-        from gdal_spark.raster import webp
 
-        return webp.decode(b)
-    if b[:4] in (b"II*\x00", b"MM\x00*", b"II+\x00", b"MM\x00+"):
-        from gdal_spark.raster import tiff
+# what a parser raises when it runs off the end of a cut payload or
+# meets a value its tables do not hold
+_PARSE_ERRORS = (struct.error, zlib.error, IndexError, KeyError)
 
-        return tiff.decode(b)
-    if b[:2] in (b"P5", b"P6") and b[2:3].isspace():
-        from gdal_spark.raster import simple_formats
 
-        return simple_formats.pnm_decode(b)
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        from gdal_spark.raster import gif
+def _open(buf: bytes, step: str, fmt: str | None = None):
+    """Run one driver ``step`` ("info" or "decode") on ``buf``: unknown
+    magic raises NotImplementedError, a truncated or malformed payload
+    ValueError."""
+    b = bytes(buf)
+    drv = next((d for d in DRIVERS if d.identify(b)), None)
+    if drv is None:
+        raise NotImplementedError(f"unrecognized image header (fmt hint {fmt!r})")
+    try:
+        return drv, getattr(drv, step)(b)
+    except _PARSE_ERRORS as e:
+        raise ValueError(f"truncated or malformed {drv.name} payload: {e!r}") from e
 
-        return gif.decode(b)
-    if b[:2] == b"BM" and len(b) > 18:
-        from gdal_spark.raster import bmp
 
-        return bmp.decode(b)
-    if b[:8] == FAKE_MAGIC:
-        return fake_lossy_decode(b)
-    raise NotImplementedError(
-        f"payload is not PNG/JPEG/WebP/GIF/GeoTIFF/fake-lossy (fmt hint {fmt!r})"
-    )
+def decode_image(buf: bytes, fmt: str | None = None) -> np.ndarray:
+    """Pixels of an image payload, format found by its magic bytes
+    (``fmt`` only labels the error when none matches)."""
+    return _open(buf, "decode", fmt)[1]
 
 
 def sniff_info(buf: bytes) -> tuple[str, int, int, int]:
@@ -397,98 +432,48 @@ def sniff_info(buf: bytes) -> tuple[str, int, int, int]:
     (``apps/gdalinfo_lib.cpp``; each format driver's ``Identify`` +
     header parse). At 100 TB this is the difference between a
     metadata-catalog scan and decoding the corpus."""
-    b = bytes(buf)
-    if b[:8] == PNG_SIG:  # IHDR is always the first chunk (PNG §5.6)
-        w = int.from_bytes(b[16:20], "big")
-        h = int.from_bytes(b[20:24], "big")
-        bands = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[b[25]]
-        return "png", w, h, bands
-    if b[:2] == b"\xff\xd8":  # walk segments to SOFn (T.81 B.2.2)
-        i = 2
-        while i + 4 <= len(b):
-            if b[i] != 0xFF:
-                i += 1
-                continue
-            m = b[i + 1]
-            if m in (0xFF, 0x01) or 0xD0 <= m <= 0xD9:
-                i += 2
-                continue
-            if 0xC0 <= m <= 0xCF and m not in (0xC4, 0xC8, 0xCC):
-                h = int.from_bytes(b[i + 5 : i + 7], "big")
-                w = int.from_bytes(b[i + 7 : i + 9], "big")
-                return "jpeg", w, h, b[i + 9]
-            i += 2 + int.from_bytes(b[i + 2 : i + 4], "big")
-        raise ValueError("JPEG stream without SOF marker")
-    if b[:4] == b"RIFF" and b[8:12] == b"WEBP":
-        tag = b[12:16]
-        if tag == b"VP8L":
-            v = int.from_bytes(b[21:25], "little")  # 14-bit w-1, h-1, alpha
-            return "webp", (v & 0x3FFF) + 1, ((v >> 14) & 0x3FFF) + 1, (
-                4 if (v >> 28) & 1 else 3
-            )
-        if tag == b"VP8 ":  # lossy key frame (RFC 6386 §9.1)
-            if b[23:26] != b"\x9d\x01\x2a":
-                raise ValueError("VP8 stream without start code")
-            w = int.from_bytes(b[26:28], "little") & 0x3FFF
-            h = int.from_bytes(b[28:30], "little") & 0x3FFF
-            return "webp", w, h, 3
-        if tag == b"VP8X":  # extended container: canvas size + flags
-            flags = b[20]
-            w = int.from_bytes(b[24:27], "little") + 1
-            h = int.from_bytes(b[27:30], "little") + 1
-            return "webp", w, h, 4 if flags & 0x10 else 3
-    if b[:2] in (b"II", b"MM") and b[2:4] in (b"*\x00", b"\x00*", b"+\x00", b"\x00+"):
-        en = "<" if b[:2] == b"II" else ">"
-        magic = struct.unpack(en + "H", b[2:4])[0]
-        big = magic == 43
-        if big:  # BigTIFF: 8-byte offsets, 20-byte IFD entries
-            off = struct.unpack(en + "Q", b[8:16])[0]
-            n = struct.unpack(en + "Q", b[off : off + 8])[0]
-            hdr, step, voff = 8, 20, 12
-        else:
-            off = struct.unpack(en + "I", b[4:8])[0]
-            n = struct.unpack(en + "H", b[off : off + 2])[0]
-            hdr, step, voff = 2, 12, 8
-        tags = {}
-        for k in range(int(n)):
-            e = off + hdr + step * k
-            tag, typ = struct.unpack(en + "HH", b[e : e + 4])
-            # SHORT/LONG always; LONG8 only where the 8-byte value
-            # field exists (BigTIFF) — in classic TIFF it would read
-            # past the 4-byte offset slot into the next entry
-            if tag in (256, 257, 277) and (
-                typ in (3, 4) or (big and typ == 16)
-            ):
-                fmtc = {3: "H", 4: "I", 16: "Q"}[typ]
-                tags[tag] = struct.unpack(
-                    en + fmtc, b[e + voff : e + voff + struct.calcsize(fmtc)]
-                )[0]
-        if 256 not in tags or 257 not in tags:
-            raise ValueError(
-                "TIFF header missing ImageWidth/ImageLength size tags"
-            )
-        return "tiff", tags[256], tags[257], tags.get(277, 1)
-    if b[:6] in (b"GIF87a", b"GIF89a"):
-        w, h = struct.unpack_from("<HH", b, 6)
-        return "gif", w, h, 1  # one palette-indexed band, like the driver
-    if b[:2] == b"BM" and len(b) >= 30:
-        w, h = struct.unpack_from("<ii", b, 18)
-        (bits,) = struct.unpack_from("<H", b, 28)
-        return "bmp", w, abs(h), (1 if bits <= 8 else bits // 8)
-    if b[:2] in (b"P5", b"P6") and b[2:3].isspace():
-        toks, pos = [], 2
-        while len(toks) < 3:
-            while b[pos : pos + 1].isspace():
-                pos += 1
-            if b[pos : pos + 1] == b"#":
-                pos = b.index(b"\n", pos) + 1
-                continue
-            start = pos
-            while not b[pos : pos + 1].isspace():
-                pos += 1
-            toks.append(int(b[start:pos]))
-        return "pnm", toks[0], toks[1], 3 if b[:2] == b"P6" else 1
-    raise NotImplementedError("unrecognized header")
+    drv, (w, h, bands) = _open(buf, "info")
+    return drv.name, w, h, bands
+
+
+# ---------------------------------------------------------------------------
+# Per-image UDF runner
+# ---------------------------------------------------------------------------
+
+
+def decoded_rows(batches, fn):
+    """The body of :func:`map_images`, one pandas batch at a time: each
+    row's ``bytes`` are decoded and ``fn(row, pixels)`` yields output
+    tuples, gathered into one positional DataFrame per batch.
+
+    A one-entry cache skips the decode when a row carries the same
+    payload as the row before it: rows of one image arrive adjacent
+    (the tiles an image covers, its join pairs), so each image is
+    decoded once. Keying on the payload rather than ``image_id`` stays
+    right if two images ever share an id."""
+    last, pixels = None, None
+    for pdf in batches:
+        rows = []
+        for r in pdf.itertuples():
+            if r.bytes != last:
+                pixels = decode_image(r.bytes, r.fmt)
+                last = r.bytes
+            rows.extend(fn(r, pixels))
+        if rows:
+            # unnamed columns: Spark assigns them to the schema by position
+            yield pd.DataFrame(rows)
+
+
+def map_images(images, schema: str, fn):
+    """``images.mapInPandas`` over ``fn(row, pixels) -> iterable of
+    tuples in schema order``, with the Arrow batch clamped for
+    pixel-bearing rows (``session.ensure_pixel_batch_size``). ``images``
+    needs ``bytes`` and ``fmt`` columns; every other column reaches
+    ``fn`` as a row attribute."""
+    from gdal_spark.session import ensure_pixel_batch_size
+
+    ensure_pixel_batch_size(images.sparkSession)
+    return images.mapInPandas(partial(decoded_rows, fn=fn), schema=schema)
 
 
 def psnr(a: np.ndarray, b: np.ndarray) -> float:

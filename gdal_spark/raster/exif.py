@@ -26,6 +26,8 @@ from __future__ import annotations
 
 import struct
 
+from gdal_spark.raster import codec
+
 # EXIF/TIFF field types (TIFF 6.0 §2; gcore/gdalexif.h:18-34)
 _T_BYTE = 1
 _T_ASCII = 2
@@ -203,7 +205,7 @@ def _walk_ifd(buf: bytes, tiff0: int, ifd_off: int, e: str, names, out_raw):
 def find_app1_exif(jpeg: bytes):
     """Offset/length of the APP1 Exif payload (after ``Exif\\0\\0``),
     or ``None``. Marker scan identical in shape to the SOF sniffers."""
-    if len(jpeg) < 4 or jpeg[0:2] != b"\xff\xd8":
+    if len(jpeg) < 4 or codec.identify(jpeg) != "jpeg":
         return None
     off = 2
     while off + 4 <= len(jpeg):
@@ -296,7 +298,7 @@ def gps_decimal(raw: dict, which: str = "lat") -> float | None:
 
 def _iter_segments(jpeg: bytes):
     """Yield (marker, payload) for every header segment before SOS."""
-    if len(jpeg) < 4 or jpeg[0:2] != b"\xff\xd8":
+    if len(jpeg) < 4 or codec.identify(jpeg) != "jpeg":
         return
     off = 2
     while off + 4 <= len(jpeg):
@@ -511,7 +513,7 @@ def build_exif_app1(metadata: dict[str, object]) -> bytes:
 def insert_exif(jpeg: bytes, metadata: dict[str, object]) -> bytes:
     """Insert an APP1 Exif segment right after SOI (where libjpeg and
     the reference's CreateCopy put it)."""
-    if jpeg[0:2] != b"\xff\xd8":
+    if codec.identify(jpeg) != "jpeg":
         raise ValueError("not a JPEG")
     return jpeg[0:2] + build_exif_app1(metadata) + jpeg[2:]
 

@@ -107,15 +107,29 @@ def _deinterlace(idx: np.ndarray) -> np.ndarray:
     return out
 
 
+def _screen(buf: bytes) -> tuple[int, int, int, int]:
+    """Logical screen descriptor: ``(w, h, flags, background)``."""
+    if buf[:6] not in (b"GIF87a", b"GIF89a"):
+        raise ValueError("not a GIF (87a/89a)")
+    if len(buf) < 13:
+        raise ValueError("truncated GIF header")
+    sw, sh, flags, background, _ = struct.unpack_from("<HHBBB", buf, 6)
+    return sw, sh, flags, background
+
+
+def info(buf: bytes) -> tuple[int, int, int]:
+    """``(w, h, 1)``: one palette-indexed band, like the driver."""
+    sw, sh, _, _ = _screen(bytes(buf))
+    return sw, sh, 1
+
+
 def decode_indices(buf: bytes) -> GifInfo:
     """First image → palette indices + color table (the band GDAL
     exposes): keys ``index (h, w) uint8``, ``palette (n, 3) uint8``,
     ``transparent`` (index or None), ``background`` (index),
     ``w``/``h`` (logical screen)."""
     buf = bytes(buf)
-    if buf[:6] not in (b"GIF87a", b"GIF89a"):
-        raise ValueError("not a GIF (87a/89a)")
-    sw, sh, flags, background, _ = struct.unpack_from("<HHBBB", buf, 6)
+    sw, sh, flags, background = _screen(buf)
     off = 13
     palette = None
     if flags & 0x80:

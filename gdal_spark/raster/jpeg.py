@@ -956,6 +956,64 @@ def _ac_records(win: np.ndarray, win16: np.ndarray, lut: np.ndarray) -> array:
     return out
 
 
+_SOF_MARKERS = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}  # SOF0-SOF15
+
+
+def _next_marker(buf: bytes, pos: int) -> tuple[int | None, int]:
+    """``(marker, position)`` of the next marker segment at or after
+    ``pos``, stepping over stray bytes, fill bytes and standalone
+    markers (T.81 B.1.1.2-3); ``(None, len(buf))`` at the end."""
+    while pos + 1 < len(buf):
+        if buf[pos] != 0xFF:
+            pos += 1
+            continue
+        marker = buf[pos + 1]
+        if marker == 0xFF:  # fill byte
+            pos += 1
+        elif marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
+            pos += 2
+        else:
+            return marker, pos
+    return None, len(buf)
+
+
+def _segment(buf: bytes, pos: int) -> bytes:
+    """Payload of the marker segment at ``pos`` (its 2-byte length
+    counts itself)."""
+    seglen = int.from_bytes(buf[pos + 2 : pos + 4], "big")
+    if seglen < 2 or pos + 2 + seglen > len(buf):
+        raise ValueError("truncated JPEG marker segment")
+    return buf[pos + 4 : pos + 2 + seglen]
+
+
+def _frame_header(seg: bytes) -> tuple[int, int, int, list]:
+    """SOFn payload → ``(precision, h, w, [(id, h, v, quant id), ...])``."""
+    if len(seg) < 6 or len(seg) < 6 + 3 * seg[5]:
+        raise ValueError("truncated JPEG frame header")
+    prec, h, w, nc = struct.unpack_from(">BHHB", seg, 0)
+    comps = []
+    for i in range(nc):
+        cid, hv, qid = seg[6 + 3 * i : 9 + 3 * i]
+        comps.append((cid, hv >> 4, hv & 15, qid))
+    return prec, h, w, comps
+
+
+def info(buf: bytes) -> tuple[int, int, int]:
+    """``(w, h, components)`` from the first SOFn frame header, reached
+    by walking the marker segments before it (T.81 B.2.2)."""
+    buf = bytes(buf)
+    pos = 2
+    while True:
+        marker, pos = _next_marker(buf, pos)
+        if marker is None or marker in (0xD9, 0xDA):
+            raise ValueError("JPEG stream without SOF marker")
+        seg = _segment(buf, pos)
+        if marker in _SOF_MARKERS:
+            _, h, w, comps = _frame_header(seg)
+            return w, h, len(comps)
+        pos += 4 + len(seg)
+
+
 def decode(
     buf: bytes, raw_components: bool = False, cmyk_to_rgb: bool = True
 ) -> np.ndarray:
@@ -987,18 +1045,12 @@ def decode(
     progressive = False
     prog_scans: list[dict] = []  # one entry per SOS (progressive only)
     base_segs: list[bytearray] | None = None
-    while pos < len(buf):
-        if buf[pos] != 0xFF:
-            pos += 1
-            continue
-        marker = buf[pos + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker == 0xD9:
+    while True:
+        marker, pos = _next_marker(buf, pos)
+        if marker is None or marker == 0xD9:
             break
-        (seglen,) = struct.unpack_from(">H", buf, pos + 2)
-        seg = buf[pos + 4 : pos + 2 + seglen]
+        seg = _segment(buf, pos)
+        seglen = len(seg) + 2
         if marker == 0xDB:  # DQT
             o = 0
             while o < len(seg):
@@ -1011,15 +1063,11 @@ def decode(
                 qtabs[tq] = z
                 o += 65
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1/2 (sequential + progressive)
-            prec, h_img, w_img, nc = struct.unpack_from(">BHHB", seg, 0)
+            prec, h_img, w_img, comps = _frame_header(seg)
             if prec != 8:
                 raise NotImplementedError("only 8-bit precision")
             progressive = marker == 0xC2
-            comps = []
-            for i in range(nc):
-                cid, hv, qid = struct.unpack_from(">BBB", seg, 6 + 3 * i)
-                comps.append((cid, hv >> 4, hv & 15, qid))
-        elif marker == 0xC3 or 0xC5 <= marker <= 0xCF and marker not in (0xC8, 0xCC):
+        elif marker in _SOF_MARKERS:
             raise NotImplementedError(f"non-baseline SOF 0x{marker:02x}")
         elif marker == 0xC4:  # DHT
             o = 0

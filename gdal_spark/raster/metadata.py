@@ -27,6 +27,7 @@ from __future__ import annotations
 import struct
 import zlib
 
+from gdal_spark.raster import codec
 from gdal_spark.raster import exif as _exif
 
 # ---------------------------------------------------------------------------
@@ -35,7 +36,7 @@ from gdal_spark.raster import exif as _exif
 
 def png_chunks(buf: bytes):
     """Yield (type, data) for each PNG chunk."""
-    if buf[:8] != b"\x89PNG\r\n\x1a\n":
+    if codec.identify(buf) != "png":
         return
     off = 8
     while off + 8 <= len(buf):
@@ -164,7 +165,7 @@ def build_png_itxt_xmp(xmp: str) -> bytes:
 
 def insert_png_chunks(png: bytes, chunks: list[bytes]) -> bytes:
     """Insert raw chunks right after IHDR."""
-    if png[:8] != b"\x89PNG\r\n\x1a\n":
+    if codec.identify(png) != "png":
         raise ValueError("not a PNG")
     (ln,) = struct.unpack_from(">I", png, 8)
     end_ihdr = 8 + 12 + ln
@@ -176,7 +177,7 @@ def insert_png_chunks(png: bytes, chunks: list[bytes]) -> bytes:
 
 
 def _webp_chunks(buf: bytes):
-    if buf[:4] != b"RIFF" or buf[8:12] != b"WEBP":
+    if codec.identify(buf) != "webp":
         return
     off = 12
     while off + 8 <= len(buf):

@@ -26,7 +26,6 @@ golden-test currency (``alg/gdalchecksum.cpp:48``).
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from gdal_spark.raster import codec
@@ -210,24 +209,12 @@ def fill_nodata_array(band: np.ndarray, nodata: int) -> np.ndarray:
 
 
 def _per_image(images: DataFrame, fn, extra_cols: str):
-    from gdal_spark.session import ensure_pixel_batch_size
+    """Band 0 of each image → ``(image_id, *fn(band))``."""
 
-    ensure_pixel_batch_size(images.sparkSession)
-    schema = f"image_id string, {extra_cols}"
+    def run(r, arr):
+        yield (r.image_id, *fn(arr[:, :, 0] if arr.ndim == 3 else arr))
 
-    def run(it):
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = codec.decode_image(r.bytes, r.fmt)
-                b = arr[:, :, 0] if arr.ndim == 3 else arr
-                rows.append((r.image_id, *fn(b)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["image_id"] + [c.split()[0] for c in extra_cols.split(", ")]
-                )
-
-    return images.mapInPandas(run, schema=schema)
+    return codec.map_images(images, f"image_id string, {extra_cols}", run)
 
 
 def proximity(images: DataFrame, target_min: int = 200, maxdist: float = 64.0) -> DataFrame:

@@ -172,8 +172,8 @@ def read_pds(label_bytes: bytes, resolve=None,
         fname = _clean(key("COMPRESSED_FILE.FILE_NAME"))
         if fname and resolve is not None and not header_only:
             payload = resolve(fname)
-            from gdal_spark.raster import tiff as _tiff
-            if payload[:4] in (b"II*\0", b"MM\0*"):
+            from gdal_spark.raster import codec, tiff as _tiff
+            if codec.identify(payload) == "tiff":
                 arr, _ = _tiff.decode_full(payload)
                 delegated = arr.squeeze()
             else:

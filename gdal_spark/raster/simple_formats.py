@@ -154,11 +154,11 @@ def pnm_encode(arr: np.ndarray) -> bytes:
     return head.encode("ascii") + body
 
 
-def pnm_decode(buf: bytes) -> np.ndarray:
-    b = bytes(buf)
+def _pnm_header(b: bytes) -> tuple[int, int, int, int]:
+    """``(w, h, maxval, data offset)`` from the magic, width, height
+    and maxval tokens (``#`` comments allowed)."""
     if b[:2] not in (b"P5", b"P6"):
         raise ValueError("not a binary PNM payload")
-    # header = magic, width, height, maxval tokens (comments allowed)
     tokens, pos = [], 2
     while len(tokens) < 3:
         while pos < len(b) and b[pos:pos + 1].isspace():
@@ -169,9 +169,22 @@ def pnm_decode(buf: bytes) -> np.ndarray:
         start = pos
         while pos < len(b) and not b[pos:pos + 1].isspace():
             pos += 1
+        if pos == len(b):  # the header needs whitespace after maxval
+            raise ValueError("truncated PNM header")
         tokens.append(int(b[start:pos]))
-    pos += 1  # single whitespace after maxval
     w, h, maxval = tokens
+    return w, h, maxval, pos + 1  # single whitespace after maxval
+
+
+def pnm_info(buf: bytes) -> tuple[int, int, int]:
+    b = bytes(buf)
+    w, h, _, _ = _pnm_header(b)
+    return w, h, 3 if b[:2] == b"P6" else 1
+
+
+def pnm_decode(buf: bytes) -> np.ndarray:
+    b = bytes(buf)
+    w, h, maxval, pos = _pnm_header(b)
     # 2-byte samples are big-endian per the Netpbm spec (pnm(5))
     dt = np.dtype(">u2") if maxval > 255 else np.dtype("u1")
     n = w * h * (3 if b[:2] == b"P6" else 1)

@@ -105,13 +105,15 @@ def _read_ifd(buf: bytes, bo: str, big: bool, off: int):
     else:
         (n,) = struct.unpack_from(bo + "H", buf, off)
         ent0, esz, cnt_fmt, inline = off + 2, 12, "I", 4
+    if ent0 + n * esz > len(buf):
+        raise ValueError("truncated TIFF: IFD runs past the end")
     tags = {}
     for i in range(n):
         e = ent0 + i * esz
         tag, typ = struct.unpack_from(bo + "HH", buf, e)
         (count,) = struct.unpack_from(bo + cnt_fmt, buf, e + 4)
         vpos = e + esz - inline
-        if typ not in _TYPES:
+        if typ not in _TYPES or (typ >= 16 and not big):  # LONG8 & co: BigTIFF only
             continue
         ch, size = _TYPES[typ]
         nbytes = count * size
@@ -120,6 +122,8 @@ def _read_ifd(buf: bytes, bo: str, big: bool, off: int):
         else:
             dpos = vpos
         raw = buf[dpos : dpos + nbytes]
+        if len(raw) < nbytes:
+            raise ValueError(f"truncated TIFF: tag {tag} values run past the end")
         if typ == 2:  # ASCII
             tags[tag] = raw.split(b"\x00")[0].decode("latin-1")
             continue
@@ -129,8 +133,11 @@ def _read_ifd(buf: bytes, bo: str, big: bool, off: int):
         else:
             vals = list(struct.unpack(bo + ch * count, raw))
         tags[tag] = vals[0] if count == 1 else vals
-    (nxt,) = struct.unpack_from(bo + cnt_fmt, buf, ent0 + n * esz)
-    return tags, nxt
+    # a next-IFD pointer cut off by the end of the file ends the chain,
+    # as in libtiff's TIFFFetchDirectory
+    nxt_pos = ent0 + n * esz
+    nxt = int.from_bytes(buf[nxt_pos : nxt_pos + inline], "little" if bo == "<" else "big")
+    return tags, nxt if nxt_pos + inline <= len(buf) else 0
 
 
 def _as_list(v):
@@ -349,6 +356,16 @@ def _geo(tags) -> TiffInfo:
         except ValueError:
             pass
     return TiffInfo(geotransform=gt, epsg=epsg, nodata=nodata)
+
+
+def info(buf: bytes) -> tuple[int, int, int]:
+    """``(w, h, bands)`` from the first IFD's size tags."""
+    buf = bytes(buf)
+    bo, big, off = _read_header(buf)
+    tags, _ = _read_ifd(buf, bo, big, off)
+    if 256 not in tags or 257 not in tags:
+        raise ValueError("TIFF header missing ImageWidth/ImageLength size tags")
+    return int(tags[256]), int(tags[257]), int(tags.get(277, 1))
 
 
 def decode(buf: bytes, ifd_index: int = 0) -> np.ndarray:

@@ -6,9 +6,9 @@ Re-expresses ``gdal2tiles.py`` / ``gdal raster tile``
 1. **assign** (pure SQL, no UDF): explode image footprints to covering
    XYZ tiles per zoom — the distributed ``tminmax`` enumeration of
    ``generate_base_tiles`` (gdal2tiles.py:2801-2824).
-2. **render base tiles** (``mapInPandas``): per (image, tile) pair
-   decode-once-per-image (partition-local cache — tiles of one image
-   are adjacent after explode, so no shuffle is needed for reuse),
+2. **render base tiles** (``codec.map_images``): per (image, tile)
+   pair decode-once-per-image (the runner's one-entry cache — tiles of
+   one image are adjacent after explode, so no shuffle is needed),
    inverse-mercator warp into the 256² tile window
    (gdal2tiles ``geo_query`` + ``scale_query_to_tile``,
    :2968/:838), then **compose** per tile (first-wins over alpha,
@@ -57,7 +57,7 @@ from gdal_spark.operators.spatial_join import explode_bbox_cells
 from gdal_spark.raster import codec
 from gdal_spark.raster.checksum import checksum
 from gdal_spark.raster.resample import block_reduce
-from gdal_spark.raster.warp import warp_lonlat_to_merc_tile
+from gdal_spark.raster.warp import warp_lonlat_to_grid, warp_lonlat_to_merc_tile
 
 TILE_SIZE = 256
 
@@ -142,9 +142,6 @@ def _render_partials(
     (GlobalGeodetic, tmscompatible 2×1 root layout): tile bounds are
     lon/lat rectangles, so the per-tile sampling is a pure linear
     window resample (no mercator inversion)."""
-    from gdal_spark.session import ensure_pixel_batch_size
-
-    ensure_pixel_batch_size(images.sparkSession)
     m = tm.GlobalMercator(tile_size)
     geodetic = profile == "geodetic"
     gg = tm.GlobalGeodetic(tmscompatible=True, tile_size=tile_size)
@@ -188,48 +185,28 @@ def _render_partials(
 
     partial_schema = "z int, tx int, ty int, image_id string, rgba binary"
 
-    def render(it):
-        from gdal_spark.raster.warp import warp_lonlat_to_grid
+    def render(r, arr):
+        # the tiles an image covers are adjacent rows, so the runner
+        # decodes each image once
+        if geodetic:
+            tb = gg.TileBounds(r.wtx, r.wty, zoom)
+            tile, valid = warp_lonlat_to_grid(
+                arr, r.lon_min, r.lat_min, r.lon_max, r.lat_max,
+                tb, 4326, tile_size, tile_size, resampling,
+            )
+        else:
+            tb = m.TileBounds(r.wtx, r.wty, zoom)
+            tile, valid = warp_lonlat_to_merc_tile(
+                arr, r.lon_min, r.lat_min, r.lon_max, r.lat_max, tb, tile_size, resampling,
+            )
+        if not valid.any():
+            return  # skip-blank (gdal2tiles exclude_transparent)
+        if tile.ndim == 2:
+            tile = np.repeat(tile[:, :, None], 3, axis=2)
+        rgba = np.dstack([tile, (valid * 255).astype(np.uint8)])
+        yield (zoom, r.wtx, r.wty, r.image_id, _pack(rgba))
 
-        cache: dict[str, np.ndarray] = {}
-        for pdf in it:
-            rows = []
-            for r in pdf.itertuples():
-                arr = cache.get(r.image_id)
-                if arr is None:
-                    cache.clear()  # tiles per image are adjacent: keep 1
-                    arr = codec.decode_image(r.bytes, r.fmt)
-                    cache[r.image_id] = arr
-                if geodetic:
-                    tb = gg.TileBounds(r.wtx, r.wty, zoom)
-                    tile, valid = warp_lonlat_to_grid(
-                        arr, r.lon_min, r.lat_min, r.lon_max, r.lat_max,
-                        tb, 4326, tile_size, tile_size, resampling,
-                    )
-                else:
-                    tb = m.TileBounds(r.wtx, r.wty, zoom)
-                    tile, valid = warp_lonlat_to_merc_tile(
-                        arr,
-                        r.lon_min,
-                        r.lat_min,
-                        r.lon_max,
-                        r.lat_max,
-                        tb,
-                        tile_size,
-                        resampling,
-                    )
-                if not valid.any():
-                    continue  # skip-blank (gdal2tiles exclude_transparent)
-                if tile.ndim == 2:
-                    tile = np.repeat(tile[:, :, None], 3, axis=2)
-                rgba = np.dstack([tile, (valid * 255).astype(np.uint8)])
-                rows.append((zoom, r.wtx, r.wty, r.image_id, _pack(rgba)))
-            if rows:
-                yield pd.DataFrame(
-                    rows, columns=["z", "tx", "ty", "image_id", "rgba"]
-                )
-
-    return work.mapInPandas(render, schema=partial_schema)
+    return codec.map_images(work, partial_schema, render)
 
 
 def _compose_raw(partials: DataFrame, tile_size: int = TILE_SIZE) -> DataFrame:

@@ -793,37 +793,72 @@ def _read_code(br: _BitReader, alphabet: int) -> _PrefixCode:
     return _PrefixCode(lengths)
 
 
+def _image_chunk(b: bytes) -> tuple[bytes, int, int]:
+    """``(tag, payload offset, declared length)`` of the first VP8L /
+    VP8 / VP8X chunk."""
+    if b[:4] != b"RIFF" or b[8:12] != b"WEBP":
+        raise ValueError("not a WebP (RIFF/WEBP) container")
+    off = 12
+    while off + 8 <= len(b):
+        tag = b[off : off + 4]
+        (ln,) = struct.unpack_from("<I", b, off + 4)
+        if tag in (b"VP8L", b"VP8 ", b"VP8X"):
+            return tag, off + 8, ln
+        off += 8 + ln + (ln & 1)
+    raise ValueError("no VP8L/VP8/VP8X chunk found")
+
+
+def _vp8l_header(payload: bytes) -> tuple[int, int, int]:
+    """``(w, h, alpha_hint)`` from the VP8L signature byte and its
+    14-bit w-1, 14-bit h-1, alpha and version fields."""
+    if len(payload) < 5:
+        raise ValueError("truncated VP8L header")
+    if payload[0] != 0x2F:
+        raise ValueError("bad VP8L signature")
+    v = int.from_bytes(payload[1:5], "little")
+    if v >> 29:
+        raise ValueError(f"unsupported VP8L version {v >> 29}")
+    return (v & 0x3FFF) + 1, ((v >> 14) & 0x3FFF) + 1, (v >> 28) & 1
+
+
+def info(buf: bytes) -> tuple[int, int, int]:
+    """``(w, h, bands)`` from the first image chunk's header: VP8L,
+    lossy VP8 key frame (RFC 6386 §9.1) or VP8X canvas + alpha flag."""
+    b = bytes(buf)
+    tag, start, _ = _image_chunk(b)
+    data = b[start : start + 10]  # the longest of the three headers
+    if tag == b"VP8L":
+        w, h, alpha = _vp8l_header(data)
+        return w, h, 4 if alpha else 3
+    if len(data) < 10:
+        raise ValueError(f"truncated {tag.decode().strip()} header")
+    if tag == b"VP8 ":
+        if data[3:6] != b"\x9d\x01\x2a":
+            raise ValueError("VP8 stream without start code")
+        w = int.from_bytes(data[6:8], "little") & 0x3FFF
+        h = int.from_bytes(data[8:10], "little") & 0x3FFF
+        return w, h, 3
+    w = int.from_bytes(data[4:7], "little") + 1
+    h = int.from_bytes(data[7:10], "little") + 1
+    return w, h, 4 if data[0] & 0x10 else 3
+
+
 def decode(buf: bytes) -> np.ndarray:
     """Decode a lossless WebP (VP8L) file — the no-transform /
     no-cache / no-meta literal subset (everything :func:`encode`
     emits). Returns HxWx4 if alpha is used, else HxWx3."""
     b = bytes(buf)
-    if b[:4] != b"RIFF" or b[8:12] != b"WEBP":
-        raise ValueError("not a WebP (RIFF/WEBP) container")
-    off = 12
-    payload = None
-    while off + 8 <= len(b):
-        tag = b[off : off + 4]
-        (ln,) = struct.unpack_from("<I", b, off + 4)
-        if tag == b"VP8L":
-            payload = b[off + 8 : off + 8 + ln]
-            break
-        if tag in (b"VP8 ", b"VP8X"):
-            # lossy VP8 / extended container: the cluster codec library
-            # (capability-probed; frmts/webp/webpdataset.cpp:1210 path)
-            return _decode_via_libwebp(b)
-        off += 8 + ln + (ln & 1)
-    if payload is None:
-        raise ValueError("no VP8L chunk found")
-    if payload[0] != 0x2F:
-        raise ValueError("bad VP8L signature")
+    tag, start, ln = _image_chunk(b)
+    if tag != b"VP8L":
+        # lossy VP8 / extended container: the cluster codec library
+        # (capability-probed; frmts/webp/webpdataset.cpp:1210 path)
+        return _decode_via_libwebp(b)
+    payload = b[start : start + ln]
+    if len(payload) < ln:
+        raise ValueError("truncated VP8L chunk")
+    w, h, alpha_hint = _vp8l_header(payload)
     br = _BitReader(payload[1:])
-    w = br.read(14) + 1
-    h = br.read(14) + 1
-    alpha_hint = br.read(1)
-    version = br.read(3)
-    if version != 0:
-        raise ValueError(f"unsupported VP8L version {version}")
+    br.pos = 32  # past the header fields
     if br.read(1):
         # VP8L transforms (predictor/color/subtract-green/palette):
         # outside the pure-NumPy subset — fall back to the library
