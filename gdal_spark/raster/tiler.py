@@ -24,18 +24,21 @@ the bench wall):
 - Stage payloads between render → compose → overviews are **raw
   zlib-compressed RGBA buffers**, not PNG: the PNG filter/chunk work
   happens exactly once per FINAL tile, in one finalize pass.
-- Compose is ``repartition(z,tx,ty)`` + ``sortWithinPartitions`` +
-  ``mapInPandas`` with a streaming group-by: ONE Python call handles
-  an entire partition's worth of tiles (hundreds), instead of one
+- Compose and overviews are one fold (``_fold_tiles``):
+  ``repartition(z,tx,ty)`` + ``sortWithinPartitions`` + ``mapInPandas``
+  with a streaming group-by: ONE Python call handles an entire
+  partition's worth of tiles (hundreds), instead of one
   ``applyInPandas`` invocation per tile group (~10 ms × thousands of
   groups of pure overhead).
 - Every raw level is persisted (tracked in ``gdal_spark.cache``):
   the union + next-level branches both consume it, and without the
   persist Spark recomputes level L's compose once per higher level.
 
-Resume = anti-join against the tile manifest (replacing the
-reference's per-file existence checks, gdal2tiles.py:2852-2855);
-per-partition lineage + metrics rows are appended on every run
+Resume = anti-join against the tiles already written (replacing the
+reference's per-file existence checks, gdal2tiles.py:2852-2855): the
+tiles dataset is its own checkpoint, read back key-columns-only by
+``written_tiles``, so one commit makes a tile both written and done.
+Per-partition lineage + metrics rows are appended on every run
 (north-rule checkpointing). Writes are parquet partitioned by ``z``
 ((z, x) directory layout ≈ the XYZ disk layout; swap for Iceberg
 ``writeTo`` on a cluster with an Iceberg catalog).
@@ -43,12 +46,13 @@ per-partition lineage + metrics rows are appended on every run
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
+import zlib
 
 import numpy as np
 import pandas as pd
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -60,8 +64,6 @@ from gdal_spark.raster.resample import block_reduce
 from gdal_spark.raster.warp import warp_lonlat_to_grid, warp_lonlat_to_merc_tile
 
 TILE_SIZE = 256
-
-ASSIGN_SCHEMA_COLS = ["image_id", "z", "tx", "ty", "x", "y", "quadkey"]
 
 
 def assign_tiles(footprints: DataFrame, zoom: int) -> DataFrame:
@@ -78,38 +80,38 @@ def assign_tiles(footprints: DataFrame, zoom: int) -> DataFrame:
     )
 
 
+def _explode_geodetic(df: DataFrame, zoom: int, tmscompatible: bool = True) -> DataFrame:
+    """``explode_bbox_cells`` in the GlobalGeodetic profile: each bbox
+    row exploded to its covering plate-carrée tiles as ``_tx``/``_ty``
+    (2×1 root layout when tmscompatible)."""
+    return df.withColumn(
+        "_tx",
+        F.explode(F.sequence(
+            tm.geodetic_tile_x(F.col("lon_min"), zoom, tmscompatible),
+            tm.geodetic_tile_x(F.col("lon_max"), zoom, tmscompatible),
+        )),
+    ).withColumn(
+        "_ty",
+        F.explode(F.sequence(
+            tm.geodetic_tile_y(F.col("lat_min"), zoom, tmscompatible),
+            tm.geodetic_tile_y(F.col("lat_max"), zoom, tmscompatible),
+        )),
+    )
+
+
 def assign_tiles_geodetic(
     footprints: DataFrame, zoom: int, tmscompatible: bool = True
 ) -> DataFrame:
     """Tile cover in the GlobalGeodetic profile (gdal2tiles.py:535-633;
     ``gdal raster tile --tiling-scheme geodetic``,
-    apps/gdalalg_raster_tile.cpp:199-214) — plate-carrée tiles, 2×1
-    root layout when tmscompatible. Pure column math like the mercator
-    path."""
-    txmin = tm.geodetic_tile_x(F.col("lon_min"), zoom, tmscompatible)
-    txmax = tm.geodetic_tile_x(F.col("lon_max"), zoom, tmscompatible)
-    tymin = tm.geodetic_tile_y(F.col("lat_min"), zoom, tmscompatible)
-    tymax = tm.geodetic_tile_y(F.col("lat_max"), zoom, tmscompatible)
-    return (
-        footprints.withColumn("_gtx", F.explode(F.sequence(txmin, txmax)))
-        .withColumn("_gty", F.explode(F.sequence(tymin, tymax)))
-        .select(
-            "image_id",
-            F.lit(zoom).alias("z"),
-            F.col("_gtx").alias("tx"),
-            F.col("_gty").alias("ty"),
-        )
+    apps/gdalalg_raster_tile.cpp:199-214). Pure column math like the
+    mercator path."""
+    return _explode_geodetic(footprints, zoom, tmscompatible).select(
+        "image_id",
+        F.lit(zoom).alias("z"),
+        F.col("_tx").alias("tx"),
+        F.col("_ty").alias("ty"),
     )
-
-
-def assign_tiles_multi(footprints: DataFrame, min_zoom: int, max_zoom: int) -> DataFrame:
-    out = assign_tiles(footprints, max_zoom)
-    for z in range(max_zoom - 1, min_zoom - 1, -1):
-        out = out.unionByName(assign_tiles(footprints, z))
-    return out
-
-
-import zlib
 
 
 def _pack(canvas: np.ndarray) -> bytes:
@@ -133,10 +135,11 @@ def _render_partials(
     zoom: int,
     tile_size: int,
     resampling: str,
-    resume_manifest: DataFrame | None,
+    done: DataFrame | None,
     profile: str = "mercator",
 ) -> DataFrame:
-    """(z, tx, ty, image_id, rgba=zlib raw) partial renders.
+    """(z, tx, ty, image_id, rgba=zlib raw) partial renders of the
+    tiles at ``zoom`` not in ``done``.
 
     ``profile="geodetic"`` renders plate-carrée tiles
     (GlobalGeodetic, tmscompatible 2×1 root layout): tile bounds are
@@ -145,43 +148,14 @@ def _render_partials(
     m = tm.GlobalMercator(tile_size)
     geodetic = profile == "geodetic"
     gg = tm.GlobalGeodetic(tmscompatible=True, tile_size=tile_size)
-    if geodetic:
-        work = (
-            images.withColumn(
-                "wtx",
-                F.explode(
-                    F.sequence(
-                        tm.geodetic_tile_x(F.col("lon_min"), zoom),
-                        tm.geodetic_tile_x(F.col("lon_max"), zoom),
-                    )
-                ),
-            )
-            .withColumn(
-                "wty",
-                F.explode(
-                    F.sequence(
-                        tm.geodetic_tile_y(F.col("lat_min"), zoom),
-                        tm.geodetic_tile_y(F.col("lat_max"), zoom),
-                    )
-                ),
-            )
+    cells = _explode_geodetic(images, zoom) if geodetic else explode_bbox_cells(images, zoom=zoom)
+    # rename helpers: pandas itertuples mangles leading underscores
+    work = cells.withColumnRenamed("_tx", "wtx").withColumnRenamed("_ty", "wty")
+    if done is not None:
+        base = done.filter(F.col("z") == zoom).select(
+            F.col("tx").alias("wtx"), F.col("ty").alias("wty")
         )
-    else:
-        # rename helpers: pandas itertuples mangles leading underscores
-        work = (
-            explode_bbox_cells(images, zoom=zoom)
-            .withColumnRenamed("_tx", "wtx")
-            .withColumnRenamed("_ty", "wty")
-        )
-    if resume_manifest is not None:
-        done = resume_manifest.select(
-            F.col("z"), F.col("tx").alias("_mtx"), F.col("ty").alias("_mty")
-        ).filter(F.col("z") == zoom)
-        work = work.join(
-            done,
-            (work["wtx"] == done["_mtx"]) & (work["wty"] == done["_mty"]),
-            "left_anti",
-        )
+        work = work.join(base, ["wtx", "wty"], "left_anti")
 
     partial_schema = "z int, tx int, ty int, image_id string, rgba binary"
 
@@ -209,50 +183,59 @@ def _render_partials(
     return codec.map_images(work, partial_schema, render)
 
 
-def _compose_raw(partials: DataFrame, tile_size: int = TILE_SIZE) -> DataFrame:
-    """Streaming first-wins compose: partials hash-partitioned on the
-    tile key and sorted (key, image_id); one ``mapInPandas`` call then
-    walks each partition's sorted stream, carrying the open canvas
-    across Arrow batch boundaries. Deterministic: first-wins by
-    image_id order exactly like the old per-group compose."""
+def _fold_tiles(rows: DataFrame, order: list[str], new, paste, finish) -> DataFrame:
+    """Streaming group-by on the tile key: ``rows`` hash-partitioned on
+    (z, tx, ty) and sorted by the key then ``order``; one
+    ``mapInPandas`` call walks each partition's sorted stream, carrying
+    the open canvas across Arrow batch boundaries. Per tile, ``new()``
+    opens a canvas, ``paste(canvas, row)`` adds each of its rows in
+    sort order, and ``finish(canvas)`` gives the RGBA tile, emitted as
+    a raw row with the number of rows pasted."""
+    parts = rows.repartition("z", "tx", "ty").sortWithinPartitions("z", "tx", "ty", *order)
 
-    parts = partials.repartition("z", "tx", "ty").sortWithinPartitions(
-        "z", "tx", "ty", "image_id"
-    )
-
-    def compose(it):
-        cur = None
-        canvas = None
-        n = 0
-        out = []
+    def fold(it):
+        cur, canvas, n, out = None, None, 0, []
         for pdf in it:
             for r in pdf.itertuples():
                 key = (r.z, r.tx, r.ty)
                 if key != cur:
                     if cur is not None:
-                        out.append((cur[0], cur[1], cur[2], _pack(canvas), n))
+                        out.append((*cur, _pack(finish(canvas)), n))
                         if len(out) >= _EMIT_BATCH:
                             yield pd.DataFrame(out, columns=_RAW_COLS)
                             out = []
-                    cur = key
-                    canvas = np.zeros((tile_size, tile_size, 4), dtype=np.uint8)
-                    n = 0
-                part = _unpack(r.rgba, tile_size)
-                put = (part[:, :, 3] > 0) & (canvas[:, :, 3] == 0)
-                canvas[put] = part[put]
+                    cur, canvas, n = key, new(), 0
+                paste(canvas, r)
                 n += 1
         if cur is not None:
-            out.append((cur[0], cur[1], cur[2], _pack(canvas), n))
+            out.append((*cur, _pack(finish(canvas)), n))
         if out:
             yield pd.DataFrame(out, columns=_RAW_COLS)
 
-    return parts.mapInPandas(compose, schema=RAW_SCHEMA)
+    return parts.mapInPandas(fold, schema=RAW_SCHEMA)
+
+
+def _compose_raw(partials: DataFrame, tile_size: int = TILE_SIZE) -> DataFrame:
+    """First-wins compose of each tile's partials. Deterministic: the
+    fold pastes them in image_id order."""
+
+    def paste(canvas, r):
+        part = _unpack(r.rgba, tile_size)
+        put = (part[:, :, 3] > 0) & (canvas[:, :, 3] == 0)
+        canvas[put] = part[put]
+
+    return _fold_tiles(
+        partials,
+        ["image_id"],
+        lambda: np.zeros((tile_size, tile_size, 4), dtype=np.uint8),
+        paste,
+        lambda canvas: canvas,
+    )
 
 
 def _overview_raw(raw: DataFrame, tile_size: int = TILE_SIZE) -> DataFrame:
-    """One pyramid step on raw payloads: z−1 from z, streaming
-    group-by over (parent, child) sorted rows."""
-
+    """One pyramid step on raw payloads: z−1 from z, ≤4 children pasted
+    into a 2·ts canvas and 2× downsampled (average RGB, max alpha)."""
     kids = raw.select(
         (F.col("z") - 1).alias("z"),
         F.shiftright(F.col("tx"), 1).alias("tx"),
@@ -261,45 +244,25 @@ def _overview_raw(raw: DataFrame, tile_size: int = TILE_SIZE) -> DataFrame:
         F.col("ty").alias("cty"),
         "raw",
     )
-    parts = kids.repartition("z", "tx", "ty").sortWithinPartitions(
-        "z", "tx", "ty", "ctx", "cty"
+
+    def paste(big, r):
+        ox = (r.ctx - 2 * r.tx) * tile_size
+        # TMS y grows upward; canvas row 0 is the top (higher ty)
+        oy = (1 - (r.cty - 2 * r.ty)) * tile_size
+        big[oy : oy + tile_size, ox : ox + tile_size] = _unpack(r.raw, tile_size)
+
+    def finish(big):
+        rgb = block_reduce(big[:, :, :3], tile_size, tile_size, "average")
+        alpha = block_reduce(big[:, :, 3], tile_size, tile_size, "max")
+        return np.dstack([rgb, alpha])
+
+    return _fold_tiles(
+        kids,
+        ["ctx", "cty"],
+        lambda: np.zeros((2 * tile_size, 2 * tile_size, 4), dtype=np.uint8),
+        paste,
+        finish,
     )
-
-    def compose(it):
-        cur = None
-        big = None
-        n = 0
-        out = []
-
-        def finish():
-            rgb = block_reduce(big[:, :, :3], tile_size, tile_size, "average")
-            alpha = block_reduce(big[:, :, 3], tile_size, tile_size, "max")
-            return (cur[0], cur[1], cur[2], _pack(np.dstack([rgb, alpha])), n)
-
-        for pdf in it:
-            for r in pdf.itertuples():
-                key = (r.z, r.tx, r.ty)
-                if key != cur:
-                    if cur is not None:
-                        out.append(finish())
-                        if len(out) >= _EMIT_BATCH:
-                            yield pd.DataFrame(out, columns=_RAW_COLS)
-                            out = []
-                    cur = key
-                    big = np.zeros((2 * tile_size, 2 * tile_size, 4), dtype=np.uint8)
-                    n = 0
-                child = _unpack(r.raw, tile_size)
-                ox = (r.ctx - 2 * r.tx) * tile_size
-                # TMS y grows upward; canvas row 0 is the top (higher ty)
-                oy = (1 - (r.cty - 2 * r.ty)) * tile_size
-                big[oy : oy + tile_size, ox : ox + tile_size] = child
-                n += 1
-        if cur is not None:
-            out.append(finish())
-        if out:
-            yield pd.DataFrame(out, columns=_RAW_COLS)
-
-    return parts.mapInPandas(compose, schema=RAW_SCHEMA)
 
 
 def _finalize_raw(raw: DataFrame, tile_size: int = TILE_SIZE, profile: str = "mercator") -> DataFrame:
@@ -318,26 +281,6 @@ def _finalize_raw(raw: DataFrame, tile_size: int = TILE_SIZE, profile: str = "me
                 yield pd.DataFrame(rows)
 
     return raw.mapInPandas(fin, schema=TILE_SCHEMA)
-
-
-def render_base_tiles(
-    images: DataFrame,
-    zoom: int,
-    tile_size: int = TILE_SIZE,
-    resampling: str = "near",
-    resume_manifest: DataFrame | None = None,
-    profile: str = "mercator",
-) -> DataFrame:
-    """Stage 2: rendered + composed base tiles at ``zoom``.
-
-    ``images`` needs (image_id, bytes, fmt, lon_min/lat_min/lon_max/
-    lat_max). Returns (z, tx, ty, x, y, quadkey, tile(png RGBA),
-    checksum, n_srcs). ``profile``: "mercator" (WebMercatorQuad) or
-    "geodetic" (plate carrée, tmscompatible)."""
-    partials = _render_partials(
-        images, zoom, tile_size, resampling, resume_manifest, profile
-    )
-    return _finalize_raw(_compose_raw(partials, tile_size), tile_size, profile)
 
 
 def _finalize(canvas: np.ndarray, z: int, txv: int, tyv: int, n: int, tile_size: int, profile: str = "mercator"):
@@ -367,33 +310,13 @@ TILE_SCHEMA = (
 )
 
 
-def build_overview_level(tiles: DataFrame, tile_size: int = TILE_SIZE) -> DataFrame:
-    """One standalone pyramid step on FINAL tiles (PNG in, PNG out):
-    level z−1 from level z (4→1 compose + 2× average,
-    gdal2tiles.py:1466-1545). ``build_pyramid`` uses the raw-payload
-    recurrence instead — this wrapper exists for callers holding
-    already-written tile rows."""
-
-    def to_raw(it):
-        for pdf in it:
-            rows = [
-                (r.z, r.tx, r.ty, _pack(codec.png_decode(bytes(r.tile))), 1)
-                for r in pdf.itertuples()
-            ]
-            if rows:
-                yield pd.DataFrame(rows, columns=_RAW_COLS)
-
-    raw = tiles.select("z", "tx", "ty", "tile").mapInPandas(to_raw, schema=RAW_SCHEMA)
-    return _finalize_raw(_overview_raw(raw, tile_size), tile_size)
-
-
 def build_pyramid(
     images: DataFrame,
     min_zoom: int,
     max_zoom: int,
     tile_size: int = TILE_SIZE,
     resampling: str = "near",
-    resume_manifest: DataFrame | None = None,
+    done: DataFrame | None = None,
     profile: str = "mercator",
 ) -> DataFrame:
     """Base tiles at max_zoom + overview levels down to min_zoom.
@@ -403,13 +326,18 @@ def build_pyramid(
     next overview level — without the persist, Spark recomputes level
     L's compose once per level above it (the quadratic recompute that
     dominated the round-1 wall). The 4→1 overview recurrence is
-    profile-agnostic (both schemes halve both tile axes per level)."""
+    profile-agnostic (both schemes halve both tile axes per level).
+
+    ``done`` (any DataFrame with z, tx, ty — ``written_tiles`` on a
+    resume) is gdal2tiles' skip-existing rule (gdal2tiles.py:2852-2855,
+    :1490-1494): done base tiles are never rendered, and no done tile
+    of any level is emitted again. One limit: an overview tile not yet
+    done whose children were partly written by an earlier run is
+    composed from the new children only."""
     from gdal_spark.cache import release_all, track_persist
 
     release_all()
-    partials = _render_partials(
-        images, max_zoom, tile_size, resampling, resume_manifest, profile
-    )
+    partials = _render_partials(images, max_zoom, tile_size, resampling, done, profile)
     cur = track_persist(_compose_raw(partials, tile_size))
     levels = [cur]
     for _ in range(max_zoom - min_zoom):
@@ -418,11 +346,13 @@ def build_pyramid(
     out = levels[0]
     for lv in levels[1:]:
         out = out.unionByName(lv)
+    if done is not None:
+        out = out.join(done.select("z", "tx", "ty"), ["z", "tx", "ty"], "left_anti")
     return _finalize_raw(out, tile_size, profile)
 
 
 # ---------------------------------------------------------------------------
-# Sink + resume manifest + lineage (north rule)
+# Sink + resume record + lineage (north rule)
 # ---------------------------------------------------------------------------
 
 
@@ -452,17 +382,19 @@ def write_tiles(
     run_id: str | None = None,
     iceberg_table: str | None = None,
 ) -> dict:
-    """Write tiles partitioned by z, update the manifest, and append
-    per-partition lineage/metrics rows. Idempotent: rerunning with
-    ``read_manifest(out_dir)`` passed as ``resume_manifest`` renders
-    zero new tiles.
+    """Write tiles partitioned by z in one commit, then append
+    per-partition lineage/metrics rows. The tiles dataset is the resume
+    record: rerunning with ``written_tiles(spark, out_dir)`` passed as
+    ``build_pyramid``'s ``done`` renders zero new tiles, also when the
+    run failed after the tile commit.
 
     ``iceberg_table`` (e.g. ``iceberg.db.tiles``): when an Iceberg
     catalog is configured, tiles append transactionally via
     ``writeTo(...).partitionedBy(z)`` — the north-rule exactly-once
-    sink (snapshot isolation replaces the directory-append layout).
+    sink (snapshot isolation replaces the directory-append layout), and
+    the table is the resume record (``spark.table(name)`` as ``done``).
     Without a catalog the parquet ``partitionBy(z)`` layout below is
-    the fallback; the manifest/metrics paths are identical in both."""
+    the fallback; the metrics path is the same in both."""
     run_id = run_id or uuid.uuid4().hex[:12]
     t0 = time.time()
     tiles = tiles.cache()
@@ -470,7 +402,7 @@ def write_tiles(
     if iceberg_table and iceberg_available(spark, iceberg_table.split(".")[0]):
         # Append-if-exists, create-if-absent. A rerun/resume must APPEND
         # the newly rendered tiles — createOrReplace on every call would
-        # drop tiles the manifest already marks done (they'd never be
+        # drop tiles a resume treats as done (they'd never be
         # re-rendered), breaking the exactly-once claim. NOTE: this gated
         # path is unexercised in this container (no Iceberg runtime);
         # the table-exists check + append is the contract a cluster run
@@ -481,8 +413,6 @@ def write_tiles(
             tiles.writeTo(iceberg_table).partitionedBy(F.col("z")).create()
     else:
         tiles.write.mode("append").partitionBy("z").parquet(f"{out_dir}/tiles")
-    manifest = tiles.select("z", "tx", "ty", "x", "y", "quadkey", "checksum")
-    manifest.write.mode("append").parquet(f"{out_dir}/manifest")
     # per-partition metrics (progress-callback analogue,
     # ogrlayer.cpp:5372 → accumulated rows instead of a callback)
     part_counts = (
@@ -497,8 +427,12 @@ def write_tiles(
     return {"run_id": run_id, "n_tiles": n, "wall_sec": time.time() - t0}
 
 
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    path = f"{out_dir}/manifest"
-    if not os.path.exists(path):
-        return None
-    return spark.read.parquet(path)
+def written_tiles(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """(z, tx, ty) of the tiles committed under ``out_dir``, read
+    key-columns-only (no tile bytes), or None before the first commit."""
+    try:
+        return spark.read.parquet(f"{out_dir}/tiles").select("z", "tx", "ty")
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise

@@ -6,14 +6,15 @@ tiles, ``gdal2tiles.py:2852``) plus streamed-algorithm datasets
 (``frmts/gdalg/gdalgdriver.cpp:190``).  This module expresses that
 same story on Spark's two native mechanisms:
 
-- **Batch-incremental** (`process_new_images`): the tiler's manifest
-  anti-join — run any operator pipeline over only the not-yet-processed
-  rows.  This is the 100 TB production path (Iceberg snapshot diff).
+- **Batch-incremental** (`process_new_images`): the tiler's resume
+  anti-join (against the keys already written) — run any operator
+  pipeline over only the not-yet-processed rows.  This is the 100 TB
+  production path (Iceberg snapshot diff).
 - **Structured Streaming** (`stream_pipeline`): ``readStream`` over an
   arriving-files directory → the SAME DataFrame operators (they are
   stream-safe: stateless projections/joins against static dims) →
   ``foreachBatch`` sink that reuses the batch writer, giving
-  exactly-once via the streaming checkpoint + idempotent manifest.
+  exactly-once via the streaming checkpoint + idempotent resume.
   ``trigger(availableNow=True)`` makes it a catch-up batch — the
   streaming-flavored equivalent of ``--resume``.
 """

@@ -12,10 +12,11 @@ On the sandbox (no cluster) the same file runs under ``python`` with
 ``--sf-dir`` pointing at the synthetic testdata; the job plan is
 identical — only the master URL and I/O paths change.
 
-Resume semantics: ``--resume`` anti-joins the existing tile manifest
-(``gdal2tiles.py:2852`` file-existence checks → one distributed
-anti-join); per-partition lineage + metrics append on every run.
-Rerunning a completed job renders zero tiles (idempotent).
+Resume semantics: ``--resume`` anti-joins the (z, tx, ty) keys of the
+tiles already under ``--out`` (``gdal2tiles.py:2852`` file-existence
+checks → one distributed anti-join); per-partition lineage + metrics
+append on every run. Rerunning a completed job renders zero tiles
+(idempotent), also after a run that failed past its tile commit.
 """
 
 from __future__ import annotations
@@ -70,13 +71,12 @@ def main(argv=None):
     else:
         p.error("one of --images / --sf-dir is required")
 
-    manifest = tiler.read_manifest(spark, args.out) if args.resume else None
     pyramid = tiler.build_pyramid(
         images,
         min_zoom=args.min_zoom,
         max_zoom=args.max_zoom,
         resampling=args.resampling,
-        resume_manifest=manifest,
+        done=tiler.written_tiles(spark, args.out) if args.resume else None,
     )
     stats = tiler.write_tiles(spark, pyramid, args.out)
     if args.mbtiles:

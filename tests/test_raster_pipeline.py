@@ -86,9 +86,9 @@ def test_assign_tiles_matches_reference_math(spark, sf_dir):
     assert got == exp
 
 
-def test_render_base_tiles_vs_oracle(imgs):
+def test_base_tiles_vs_oracle(imgs):
     z = 11
-    tiles = tiler.render_base_tiles(imgs, z).collect()
+    tiles = tiler.build_pyramid(imgs, z, z).collect()
     assert tiles
     rows = {r.image_id: r for r in imgs.collect()}
     m = tm.GlobalMercator()
@@ -138,14 +138,82 @@ def test_pyramid_and_resume(imgs, spark, tmp_path):
     kids = {(r.tx // 2, r.ty // 2) for r in t.filter("z = 11").collect()}
     parents = {(r.tx, r.ty) for r in t.filter("z = 10").collect()}
     assert parents == kids
-    # resume: rerendering with the manifest renders ZERO new base tiles
-    manifest = tiler.read_manifest(spark, out_dir)
-    again = tiler.render_base_tiles(imgs, 11, resume_manifest=manifest)
+    # resume from the written tiles: ZERO tiles at any level again
+    again = tiler.build_pyramid(imgs, 9, 11, done=tiler.written_tiles(spark, out_dir))
     assert again.count() == 0
     # metrics/lineage rows were appended
     metrics = spark.read.parquet(f"{out_dir}/metrics")
     assert metrics.count() > 0
     assert {"run_id", "n_tiles", "bytes", "wall_sec"} <= set(metrics.columns)
+
+
+def _repeated_keys(tiles):
+    return tiles.groupBy("z", "tx", "ty").count().filter("count > 1").count()
+
+
+def test_resume_after_failure_past_tile_commit(spark, sf_dir, tmp_path, monkeypatch):
+    """A run that dies on its first write after the tile commit leaves
+    the tiles as the only record; ``--resume`` renders none of them
+    again and appends no duplicate key."""
+    import io
+    import json
+    from contextlib import redirect_stdout
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from jobs.tile_job import main
+
+    out = str(tmp_path / "tiles_out")
+    argv = [
+        "--sf-dir", sf_dir, "--out", out,
+        "--min-zoom", "9", "--max-zoom", "11",
+        "--subset", "image_id < 'img000000000020'",
+    ]
+    write_parquet = DataFrameWriter.parquet
+
+    def crash_after_tiles(self, path, *a, **kw):
+        if path != f"{out}/tiles":
+            raise RuntimeError("injected crash after the tile commit")
+        return write_parquet(self, path, *a, **kw)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", crash_after_tiles)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            main(argv)
+    written = spark.read.parquet(f"{out}/tiles").count()
+    assert written > 0
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        assert main(argv + ["--resume"]) == 0
+    assert json.loads(buf.getvalue().strip().splitlines()[-1])["n_tiles"] == 0
+    tiles = spark.read.parquet(f"{out}/tiles")
+    assert tiles.count() == written
+    assert _repeated_keys(tiles) == 0
+
+
+def test_resume_with_new_images_adds_no_duplicate(imgs, spark, tmp_path):
+    """Resuming over the old images plus shifted copies emits each
+    (z, tx, ty) once: done tiles are skipped at every level, not only
+    at the base zoom, and the keys equal a fresh build over the union."""
+    out_dir = str(tmp_path / "tiles_out")
+    old = imgs.filter(F.col("image_id") < "img000000000020")
+    shifted = (
+        old.withColumn("lon_min", F.col("lon_min") + 0.18)
+        .withColumn("lon_max", F.col("lon_max") + 0.18)
+        .withColumn("image_id", F.concat("image_id", F.lit("s")))
+    )
+    union = old.unionByName(shifted)
+    tiler.write_tiles(spark, tiler.build_pyramid(old, 9, 11), out_dir)
+    resumed = tiler.build_pyramid(union, 9, 11, done=tiler.written_tiles(spark, out_dir))
+    assert tiler.write_tiles(spark, resumed, out_dir)["n_tiles"] > 0
+
+    tiles = spark.read.parquet(f"{out_dir}/tiles")
+    assert _repeated_keys(tiles) == 0
+    fresh = tiler.build_pyramid(union, 9, 11).select("z", "tx", "ty")
+    assert {tuple(r) for r in tiles.select("z", "tx", "ty").collect()} == {
+        tuple(r) for r in fresh.collect()
+    }
 
 
 def test_geodetic_tiles_vs_oracle(imgs):
@@ -154,7 +222,7 @@ def test_geodetic_tiles_vs_oracle(imgs):
     from gdal_spark.raster.warp import warp_lonlat_to_grid
 
     z = 10
-    tiles = tiler.render_base_tiles(imgs, z, profile="geodetic").collect()
+    tiles = tiler.build_pyramid(imgs, z, z, profile="geodetic").collect()
     assert tiles
     gg = tm.GlobalGeodetic(tmscompatible=True)
     rows = {r.image_id: r for r in imgs.collect()}

@@ -92,7 +92,11 @@ def test_intersection_join_emits_clipped_geometry(spark):
 
 def test_write_tiles_iceberg_gate_falls_back(spark, tmp_path):
     """No Iceberg catalog in this sandbox: the gated sink must detect
-    that and use the parquet partitionBy(z) layout, same manifest."""
+    that and use the parquet partitionBy(z) layout, which is also the
+    resume record."""
+    import os
+
+    from gdal_spark.plans.inspect import assert_column_pruned
     from gdal_spark.raster import tiler
 
     assert tiler.iceberg_available(spark) is False
@@ -102,10 +106,16 @@ def test_write_tiles_iceberg_gate_falls_back(spark, tmp_path):
         "z int, tx int, ty int, x int, y int, quadkey string, tile binary, checksum int, n_srcs int",
     )
     out = str(tmp_path / "ice_out")
+    assert tiler.written_tiles(spark, out) is None  # nothing written yet
+    os.makedirs(f"{out}/tiles/_temporary")  # a first commit cut short
+    assert tiler.written_tiles(spark, out) is None
     info = tiler.write_tiles(spark, tiles, out, iceberg_table="iceberg.db.tiles")
     assert info["n_tiles"] == 1
     assert spark.read.parquet(f"{out}/tiles").count() == 1
-    assert tiler.read_manifest(spark, out).count() == 1
+    done = tiler.written_tiles(spark, out)
+    assert done.columns == ["z", "tx", "ty"]
+    assert_column_pruned(done, "tile")  # resume reads no tile bytes
+    assert [tuple(r) for r in done.collect()] == [(12, 1, 2)]
 
 
 def test_delaunay_and_tin_plane_exact():
